@@ -4460,7 +4460,7 @@ def oracle_sql() -> dict[str, str]:
                CAST(sum(x) AS BIGINT) AS total,
                CAST(max(x) AS BIGINT) AS max_key,
                CAST((CAST(sum(x) AS HUGEINT) * sum(x) * 1000000)
-                    // (count(*) * CAST(sum(x * x) AS HUGEINT)) AS BIGINT)
+                    // (count(*) * sum(CAST(x AS HUGEINT) * x)) AS BIGINT)
                  AS jain_ppm
         FROM c GROUP BY 1""",
         "top_paths": """

@@ -456,8 +456,7 @@ def run_fetch_kernel(spark, pages_path: str, frontier_path: str, cfg=None) -> di
     from pyspark.sql import Window, functions as F
 
     from walker_spark.config import WalkerConfig
-    from walker_spark.operators import seed as seed_ops
-    from walker_spark.operators.fetch import _make_parse_fn, mime_from_path
+    from walker_spark.operators.fetch import _make_parse_fn, mime_from_path, outlink_keys
     from walker_spark.functions.udfs import host_col
 
     cfg = cfg or WalkerConfig()
@@ -572,12 +571,9 @@ def run_fetch_kernel(spark, pages_path: str, frontier_path: str, cfg=None) -> di
         "dom", "subdom", "path", "proto", "url", "html", "mime", "found", "not_modified"
     ).mapInPandas(counting_parse, _parse_schema())
 
-    outlinks = (
-        results.select(F.explode_outer("links").alias("u"))
-        .filter(F.col("u").isNotNull())
-        .dropDuplicates(["u"])
-    )
-    keys = seed_ops.normalize_to_keys(outlinks, cfg, url_col="u")
+    # outlink keys exactly as the engine builds them: keyed by the
+    # parse kernel, filtered natively, deduplicated
+    keys = outlink_keys(results, cfg).dropDuplicates()
     unseen = keys.join(
         frontier.select("dom", "subdom", "path", "proto"),
         ["dom", "subdom", "path", "proto"],

@@ -10,7 +10,11 @@ Checks (and records) the plan properties the design claims:
 - robots source: StringEndsWith pushed to the parquet scan
   (PushedFilters), column pruning to (url, html);
 - URL-seen anti-join: hash-partitioned on the 4-column key, bloom probe
-  ahead of it in the bloom variant.
+  ahead of it in the bloom variant;
+- fetch superstep (plans captured from run_fetch itself): claimed,
+  processed and finished domains join by broadcast in the initial plan,
+  no Python node runs between the parse and URL-seen checkpoints, and
+  the domain_info commit does not re-run the claim ranking.
 """
 
 from __future__ import annotations
@@ -55,11 +59,11 @@ def main():
     sections = []
 
     def grab(title, df, checks):
-        # literal control chars (e.g. the \x00 set-key separator) would
-        # make PLANS.md a "binary" file for grep/diff tooling
-        plan = df._jdf.queryExecution().executedPlan().toString().replace(
-            "\x00", "\\x00"
-        )
+        # df may also be a plan string captured earlier; literal control
+        # chars (e.g. the \x00 set-key separator) would make PLANS.md a
+        # "binary" file for grep/diff tooling
+        plan = df if isinstance(df, str) else df._jdf.queryExecution().executedPlan().toString()
+        plan = plan.replace("\x00", "\\x00")
         lines = []
         for label, pattern, expect in checks:
             found = len(re.findall(pattern, plan))
@@ -287,6 +291,94 @@ def main():
             ("exactly one Exchange (work side only)",
              r"Exchange hashpartitioning\(url", 1),
             ("no broadcast relation anywhere", r"BroadcastExchange", 0),
+        ],
+    )
+
+    # 6. the fetch superstep's own plans, captured as run_fetch builds
+    # them (the initial plan, before AQE re-plans anything): every
+    # superstep-bounded side is an explicit broadcast, no Python runs
+    # after the parse kernel, and the domain_info commit does not re-run
+    # the claim ranking.
+    from walker_spark.operators.dispatch import run_dispatch
+    from walker_spark.sources.store import FrontierStore
+    from walker_spark.streaming.loop import CrawlEngine
+
+    engine = CrawlEngine(spark, os.path.join(root, "superstep"), cfg)
+    engine.store.overwrite("pages", synthetic.generate_pages(spark, 4, 6, seed=5))
+    engine.seed(engine.store.read("pages").select("url"))
+    run_dispatch(engine.store, cfg, NOW_MS, iteration=0)
+    captured = []
+
+    def initial_plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def capture_checkpoint(self, *a, **k):
+        captured.append(("checkpoint", initial_plan(self)))
+        return orig_checkpoint(self, *a, **k)
+
+    def capture_overwrite(self, table, df):
+        captured.append((table, initial_plan(df)))
+        return orig_overwrite(self, table, df)
+
+    DataFrame = type(engine.store.read("pages"))  # the classic implementation
+    orig_checkpoint, orig_overwrite = DataFrame.localCheckpoint, FrontierStore.overwrite
+    DataFrame.localCheckpoint, FrontierStore.overwrite = capture_checkpoint, capture_overwrite
+    try:
+        FETCH.run_fetch(engine.store, cfg, NOW_MS, iteration=0)
+    finally:
+        DataFrame.localCheckpoint, FrontierStore.overwrite = orig_checkpoint, orig_overwrite
+    checkpoints = [p for kind, p in captured if kind == "checkpoint"]
+    written = dict(captured)
+    parse_at = next(i for i, p in enumerate(checkpoints) if "MapInPandas" in p)
+    python_nodes = r"ArrowEvalPython|BatchEvalPython|MapInPandas|InPandas"
+
+    ok &= grab(
+        "Superstep robots/budget checkpoint: the claimed domains are "
+        "broadcast into the segments scan (no sort-merge join, no exchange "
+        "below the join; the only hash exchange is the budget window's)",
+        next(p for p in checkpoints if "Window" in p),
+        [
+            ("claimed domains broadcast into the segments and robots-rules scans",
+             r"BroadcastHashJoin \[dom[^\]]*\], \[dom[^\]]*\], LeftSemi", 2),
+            ("no sort-merge join", r"SortMergeJoin", 0),
+            ("one hash exchange: the budget window's dom partitioning",
+             r"Exchange hashpartitioning", 1),
+        ],
+    )
+    ok &= grab(
+        "Superstep URL-seen checkpoint: outlink keys come from the parse "
+        "checkpoint's link_keys — no Python node between the parse and "
+        "unseen checkpoints",
+        checkpoints[parse_at + 1],
+        [
+            ("no Python node", python_nodes, 0),
+            ("explodes the kernel's link_keys", r"Generate explode\(link_keys", 1),
+            ("reads the parse checkpoint", r"Scan ExistingRDD", (1,)),
+        ],
+    )
+    ok &= grab(
+        "Superstep segments commit: processed keys broadcast into the "
+        "segments anti-join, nothing exchanged",
+        written["segments"],
+        [
+            ("processed keys broadcast", r"BroadcastHashJoin[^\n]*LeftAnti", 1),
+            ("no sort-merge join", r"SortMergeJoin", 0),
+            ("no exchange of the segments scan", r"Exchange hashpartitioning", 0),
+        ],
+    )
+    ok &= grab(
+        "Superstep domain_info commit: post-claim state derived from the "
+        "claim checkpoint (claimed and finished domains broadcast), the "
+        "ranking not re-run",
+        written["domain_info"],
+        [
+            ("no claim ranking (ordered limit)", r"TakeOrderedAndProject", 0),
+            ("no max-priority cross join", r"BroadcastNestedLoopJoin", 0),
+            ("claim + unclaim joins are broadcast left-outer joins",
+             r"BroadcastHashJoin[^\n]*LeftOuter", 2),
+            ("finished = claimed minus broadcast leftover domains",
+             r"BroadcastHashJoin[^\n]*LeftAnti", (1,)),
+            ("no sort-merge join", r"SortMergeJoin", 0),
         ],
     )
 
@@ -2005,7 +2097,7 @@ def main():
             "The sandbox store overwrites domain_info once per superstep (the\n"
             "fused claim+unclaim+new-domain commit). That full rewrite is a\n"
             "sandbox artifact: the fetch superstep computes the post-claim state\n"
-            "as one in-memory plan (claim_plan/unclaim_plan/new_domain_rows),\n"
+            "as one in-memory plan (apply_claims/unclaim_plan/new_domain_rows),\n"
             "which on the Iceberg DDL path (plans/schemas.py iceberg_ddl +\n"
             "DOMAIN_INFO_MERGE_SQL) commits as MERGE INTO with merge-on-read —\n"
             "only the claimed rows' delete/data files are written, so the\n"

@@ -75,3 +75,18 @@ def test_fairness_index_known_values(spark):
     # ungrouped: one global row
     row = fairness_index(df, ["g", "k"]).collect()[0]
     assert row["n_keys"] == 6 and row["total"] == 14
+
+
+def test_fairness_rollup_squares_past_bigint(spark):
+    """One key counted above sqrt(2^63) ~ 3.04e9 squares past BIGINT;
+    under ANSI a BIGINT square raises. The rollup squares in
+    DECIMAL(38,0) and matches exact integer math."""
+    from walker_spark.operators.skew import _jain_rollup
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    xs = [3_100_000_000, 5, 1]
+    counts = spark.createDataFrame([("g", x) for x in xs], "g string, _x long")
+    row = _jain_rollup(counts, ["g"]).collect()[0]
+    total = sum(xs)
+    expect = total * total * 1_000_000 // (len(xs) * sum(x * x for x in xs))
+    assert tuple(row) == ("g", len(xs), total, max(xs), expect)

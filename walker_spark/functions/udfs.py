@@ -43,19 +43,12 @@ def _normalize_series(urls: pd.Series, purge_sids) -> pd.Series:
 
 
 def _url_key_frame(urls: pd.Series, purge_sids) -> pd.DataFrame:
-    doms, subs, paths, protos, norms = [], [], [], [], []
-    for u in urls:
-        norm = urlkernel.normalize_url(u, purge_sids) if isinstance(u, str) else None
-        key = urlkernel.primary_key(norm, purge_sids) if norm is not None else None
-        if key is None:
-            doms.append(None), subs.append(None), paths.append(None), protos.append(None)
-            norms.append(None)
-        else:
-            doms.append(key[0]), subs.append(key[1]), paths.append(key[2]), protos.append(key[3])
-            norms.append(norm)
-    return pd.DataFrame(
-        {"dom": doms, "subdom": subs, "path": paths, "proto": protos, "norm_url": norms}
-    )
+    keys = [
+        (urlkernel.url_key(u, purge_sids) if isinstance(u, str) else None)
+        or (None,) * 5
+        for u in urls
+    ]
+    return pd.DataFrame(keys, columns=["dom", "subdom", "path", "proto", "norm_url"])
 
 
 def make_normalize_udf(purge_sids=urlkernel.DEFAULT_PURGE_SIDS):
@@ -68,13 +61,18 @@ def make_normalize_udf(purge_sids=urlkernel.DEFAULT_PURGE_SIDS):
 
 def make_url_key_udf(purge_sids=urlkernel.DEFAULT_PURGE_SIDS):
     """url -> struct(dom, subdom, path, proto, norm_url); nulls when the
-    URL fails to parse or eTLD+1 cannot be derived (url.go:210-228)."""
+    URL fails to parse or eTLD+1 cannot be derived (url.go:210-228).
+
+    Marked nondeterministic so Catalyst keeps it in its own projection:
+    a deterministic struct UDF gets inlined into every filter pushed
+    below the field projection (``dom IS NOT NULL``, private-IP, ...),
+    and each inlined copy plans a separate Python evaluation."""
 
     @F.pandas_udf(URL_KEY_TYPE)
     def url_key_udf(urls: pd.Series) -> pd.DataFrame:
         return _url_key_frame(urls, purge_sids)
 
-    return url_key_udf
+    return url_key_udf.asNondeterministic()
 
 
 @F.pandas_udf(StringType())

@@ -297,6 +297,20 @@ def primary_key(
     return (dom, sub, u.request_uri(), u.scheme)
 
 
+def url_key(
+    ref: str, purge_sids=DEFAULT_PURGE_SIDS
+) -> tuple[str, str, str, str, str] | None:
+    """(dom, subdom, path, proto, norm_url) for a URL string:
+    :func:`normalize_url` then :func:`primary_key`; None when either
+    fails. The one key derivation shared by the url-key UDF and the
+    parse kernel's outlink keys, so the two paths cannot drift."""
+    norm = normalize_url(ref, purge_sids)
+    if norm is None:
+        return None
+    key = primary_key(norm, purge_sids)
+    return None if key is None else (*key, norm)
+
+
 def url_from_key(dom: str, subdom: str, path: str, proto: str) -> str:
     """Rebuild the URL string from its key (reference: CreateURL,
     url.go:29-44)."""

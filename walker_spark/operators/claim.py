@@ -24,63 +24,64 @@ from walker_spark.config import WalkerConfig
 from walker_spark.sources.store import FrontierStore
 
 
-def claim_plan(
-    di: DataFrame,
-    cfg: WalkerConfig,
-    now_ms: int,
-    claim_tok: str,
-    max_priority: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Pure plan for one claim pass over an in-memory ``domain_info``
-    state: returns ``(claimed, merged)`` where ``claimed`` is the
-    (dom, priority) rows taken this pass and ``merged`` is the full
-    post-claim domain_info. No I/O — the caller decides when to commit,
-    so a superstep can fuse claim/unclaim bookkeeping into a single
-    table write instead of three.
+def _claimable():
+    return F.col("dispatched") & F.col("claim_tok").isNull() & ~F.col("excluded")
 
-    ``max_priority=None`` folds the A1 global max INTO the plan as a
-    broadcast single-row aggregate (scalar-subquery shape): the claim's
-    first action computes it, so no superstep pays a separate
-    ``agg().collect()`` round trip. An empty ``domain_info`` yields a
-    NULL max, the eligibility predicate is then never true, and the
-    claim set is empty — the same outcome the scalar path special-cased.
-    """
-    if max_priority is None:
-        di = di.crossJoin(
-            F.broadcast(di.agg(F.max("priority").alias("_maxp")))
-        )
-        maxp = F.col("_maxp")
-    else:
-        maxp = F.lit(max_priority)
-    claimable = F.col("dispatched") & F.col("claim_tok").isNull() & ~F.col("excluded")
-    advanced = di.withColumn(
+
+def _advanced(di: DataFrame) -> DataFrame:
+    """Every claimable candidate earns its priority as claim credit."""
+    return di.withColumn(
         "next_crawl",
-        F.when(claimable, F.col("next_crawl") + F.col("priority")).otherwise(
+        F.when(_claimable(), F.col("next_crawl") + F.col("priority")).otherwise(
             F.col("next_crawl")
         ),
     )
+
+
+def choose_claims(di: DataFrame, cfg: WalkerConfig) -> DataFrame:
+    """The ranking half of a claim pass: ``(dom, priority, _maxp)`` of
+    the up-to-``claim_limit`` domains taken this pass, with the A1 max
+    priority they were ranked against. Bounded by ``claim_limit``, so a
+    superstep checkpoints it once and derives the post-claim state from
+    it with :func:`apply_claims` instead of re-running the ranking.
+
+    The A1 global max rides the plan as a broadcast single-row
+    aggregate (scalar-subquery shape): the claim's first action
+    computes it, so no superstep pays a separate ``agg().collect()``
+    round trip. An empty ``domain_info`` yields a NULL max, the
+    eligibility predicate is then never true, and the claim set is
+    empty."""
+    di = di.crossJoin(F.broadcast(di.agg(F.max("priority").alias("_maxp"))))
     # Deterministic claim order: highest accumulated credit first, then
     # priority, then domain name (the reference's token-ring order is
     # arbitrary; its tests only assert priority-proportional frequency).
-    eligible = advanced.filter(claimable & (F.col("next_crawl") >= maxp))
-    chosen = (
-        eligible.orderBy(
-            F.col("next_crawl").desc(), F.col("priority").desc(), F.col("dom")
-        )
+    return (
+        _advanced(di)
+        .filter(_claimable() & (F.col("next_crawl") >= F.col("_maxp")))
+        .orderBy(F.col("next_crawl").desc(), F.col("priority").desc(), F.col("dom"))
         .limit(cfg.frontier.claim_limit)
-        .select("dom")
-        .withColumn("_claimed", F.lit(True))
+        .select("dom", "priority", "_maxp")
     )
 
+
+def apply_claims(
+    di: DataFrame, chosen: DataFrame, now_ms: int, claim_tok: str
+) -> DataFrame:
+    """Post-claim ``domain_info``: every claimable row's credit
+    advances, and the ``chosen`` rows (from :func:`choose_claims`) take
+    ``claim_tok`` and pay the max priority they were ranked against.
+    ``chosen`` is bounded by ``claim_limit`` and usually a checkpoint,
+    which has no size statistics, so it is broadcast explicitly."""
+    taken = F.col("_maxp").isNotNull()
     now_ts = F.timestamp_millis(F.lit(now_ms))
-    merged = (
-        advanced.join(chosen, "dom", "left")
-        .withColumn("_c", F.coalesce(F.col("_claimed"), F.lit(False)))
+    return (
+        _advanced(di)
+        .join(F.broadcast(chosen.select("dom", "_maxp")), "dom", "left")
         .select(
             "dom",
             "priority",
-            F.when(F.col("_c"), F.lit(claim_tok)).otherwise(F.col("claim_tok")).alias("claim_tok"),
-            F.when(F.col("_c"), now_ts).otherwise(F.col("claim_time")).alias("claim_time"),
+            F.when(taken, F.lit(claim_tok)).otherwise(F.col("claim_tok")).alias("claim_tok"),
+            F.when(taken, now_ts).otherwise(F.col("claim_time")).alias("claim_time"),
             "dispatched",
             "excluded",
             "exclude_reason",
@@ -89,15 +90,11 @@ def claim_plan(
             "queued_links",
             "last_dispatch",
             "last_empty_dispatch",
-            F.when(F.col("_c"), F.col("next_crawl") - maxp)
+            F.when(taken, F.col("next_crawl") - F.col("_maxp"))
             .otherwise(F.col("next_crawl"))
             .alias("next_crawl"),
         )
     )
-    claimed = merged.filter(F.col("claim_tok") == F.lit(claim_tok)).select(
-        "dom", "priority"
-    )
-    return claimed, merged
 
 
 def claim_domains(
@@ -111,16 +108,14 @@ def claim_domains(
     rows (dom, priority, crawl-order deterministic)."""
     di = store.read("domain_info")
     # A1 max priority rides the claim plan as a broadcast scalar — no
-    # separate agg().collect() job.
-    claimed, merged = claim_plan(di, cfg, now_ms, claim_tok)
-    # Freeze the claimed rows BEFORE the overwrite so no re-read of the
-    # just-committed table is needed (old snapshot files stay on disk,
-    # but the checkpoint removes even that dependency).
-    claimed = claimed.localCheckpoint()
+    # separate agg().collect() job. Freeze the claimed rows BEFORE the
+    # overwrite: the ranking runs once, and no re-read of the
+    # just-committed table is needed.
+    chosen = choose_claims(di, cfg).localCheckpoint()
     # commit unconditionally: the next_crawl credit advance is scheduler
     # state and must persist even on a zero-claim pass
-    store.overwrite("domain_info", merged)
-    return claimed
+    store.overwrite("domain_info", apply_claims(di, chosen, now_ms, claim_tok))
+    return chosen.select("dom", "priority")
 
 
 def unclaim_plan(
@@ -133,9 +128,11 @@ def unclaim_plan(
     fetched domains keep claim_tok=null + dispatched=true so the next
     iteration claims them again and continues (politeness budget ST3
     can split one segment across iterations)."""
+    # finished_doms is a subset of one pass's claims (bounded by
+    # claim_limit): broadcast it, a checkpoint scan has no size stats
     fin = finished_doms.select("dom").withColumn("_fin", F.lit(True))
     merged = (
-        di.join(fin, "dom", "left")
+        di.join(F.broadcast(fin), "dom", "left")
         .withColumn("_f", F.coalesce(F.col("_fin"), F.lit(False)))
         .withColumn("_mine", F.col("claim_tok") == F.lit(claim_tok))
         .select(

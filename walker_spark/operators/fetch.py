@@ -53,7 +53,7 @@ from walker_spark.functions import htmlparse, psl, robots as robots_mod, urlkern
 from walker_spark.functions.udfs import host_col
 from walker_spark.operators import seed as seed_ops
 from walker_spark.operators import urlseen
-from walker_spark.operators.claim import claim_plan, unclaim_plan
+from walker_spark.operators.claim import apply_claims, choose_claims, unclaim_plan
 from walker_spark.plans import schemas
 from walker_spark.sources.store import FrontierStore
 
@@ -241,6 +241,10 @@ def make_robots_allowed_udf():
 # parse stage (mapInPandas kernel — SURVEY §2.9)
 # ---------------------------------------------------------------------------
 
+_LINK_KEY = StructType(
+    [StructField(c, StringType(), True) for c in schemas.LINK_KEY]
+)
+
 _PARSE_OUT = StructType(
     [
         StructField("dom", StringType(), False),
@@ -255,6 +259,9 @@ _PARSE_OUT = StructType(
         StructField("fnv_txt", LongType(), False),
         StructField("text", StringType(), True),
         StructField("links", ArrayType(StringType()), True),
+        # each link's frontier key, derived by urlkernel.url_key exactly
+        # as the url-key UDF does; links without one are left out
+        StructField("link_keys", ArrayType(_LINK_KEY), True),
         StructField("meta_noindex", BooleanType(), False),
         StructField("meta_nofollow", BooleanType(), False),
         StructField("body", StringType(), True),
@@ -308,6 +315,20 @@ def _make_parse_fn(cfg: WalkerConfig, now_ms: int, emit_text: bool = True):
             txt_in: list = [None] * n
             redirect_to: list = [None] * n
             headers_out: list = [None] * n
+            link_keys: list = [None] * n
+            # pages of one site share most of their links: derive each
+            # distinct link's key once per batch
+            key_memo: dict = {}
+
+            def keys_of(norm_links):
+                out = []
+                for link in norm_links:
+                    if link not in key_memo:
+                        key_memo[link] = urlkernel.url_key(link, parser_cfg.purge_sid_list)
+                    key = key_memo[link]
+                    if key is not None:
+                        out.append(key[:4])
+                return out
 
             for i, (url, html, mime, found, not_modified) in enumerate(
                 zip(pdf["url"], pdf["html"], pdf["mime"], pdf["found"], pdf["not_modified"])
@@ -348,6 +369,7 @@ def _make_parse_fn(cfg: WalkerConfig, now_ms: int, emit_text: bool = True):
                     redirect_to[i] = norm or target
                     if norm:
                         links[i] = [norm]
+                        link_keys[i] = keys_of(links[i])
                     continue
                 stat[i] = 200
                 mime_out[i] = mime
@@ -387,6 +409,7 @@ def _make_parse_fn(cfg: WalkerConfig, now_ms: int, emit_text: bool = True):
                             if norm:
                                 abs_links.append(norm)
                     links[i] = abs_links
+                    link_keys[i] = keys_of(abs_links)
 
             fnv_vals = _fnv.fnv1_64_batch([b if b is not None else b"" for b in fnv_in])
             txt_vals = _fnv.fnv1_64_batch([t if t is not None else b"" for t in txt_in])
@@ -410,6 +433,7 @@ def _make_parse_fn(cfg: WalkerConfig, now_ms: int, emit_text: bool = True):
                     "fnv_txt": txt_vals.astype("int64"),
                     "text": text,
                     "links": links,
+                    "link_keys": link_keys,
                     "meta_noindex": noindex,
                     "meta_nofollow": nofollow,
                     "body": body_out,
@@ -479,6 +503,21 @@ def redirect_link_rows(
         elif field.name not in ("dom", "subdom", "path", "proto", "time", "redto_url"):
             row = row.withColumn(field.name, F.lit(None).cast(field.dataType))
     return row.select(*[f.name for f in schemas.LINKS.fields])
+
+
+def outlink_keys(parsed: DataFrame, cfg: WalkerConfig) -> DataFrame:
+    """Frontier-key candidates (dom, subdom, path, proto) of the parse
+    output's outlinks, with repeats. The parse kernel already keyed
+    every link (``link_keys``, derived by urlkernel.url_key exactly as
+    the url-key UDF derives it), so this plan runs no Python: the
+    meta-nofollow, private-IP (F5) and shouldStoreParsedLink (F2)
+    filters are native expressions."""
+    if cfg.fetcher.honor_meta_nofollow:
+        parsed = parsed.filter(~F.col("meta_nofollow"))
+    keys = parsed.select(F.explode("link_keys").alias("_k")).select(
+        *[F.col("_k")[c].alias(c) for c in schemas.LINK_KEY]
+    )
+    return seed_ops.drop_private_hosts(keys, cfg).filter(link_accept_condition(cfg))
 
 
 # ---------------------------------------------------------------------------
@@ -622,9 +661,17 @@ def run_fetch(
     # the claim checkpoint below is the superstep's FIRST job; no
     # separate agg().collect() round trip (default-volume supersteps are
     # per-job-constant-dominated, so every fused job is throughput).
-    claimed, di_claimed = claim_plan(di, cfg, now_ms, claim_tok)
-    claimed = claimed.localCheckpoint()
-    n_claimed = claimed.count()
+    # The ranking runs once: the post-claim state is derived from the
+    # checkpointed choice, and the claim count is observed on the same
+    # job instead of a count() of its own.
+    claim_obs = Observation()
+    claimed = (
+        choose_claims(di, cfg)
+        .observe(claim_obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    n_claimed = int(claim_obs.get["n"])
+    di_claimed = apply_claims(di, claimed, now_ms, claim_tok)
     _mark("claim")
     metrics = {"claimed_domains": n_claimed, "now_ms": now_ms}
     if n_claimed == 0:
@@ -634,7 +681,13 @@ def run_fetch(
         store.record_run("fetch", iteration, {"metrics": metrics})
         return {**metrics, "fetched": 0, "outlinks_new": 0}
 
-    segs = store.read("segments").join(claimed.select("dom"), "dom", "left_semi")
+    # Every superstep-bounded side is broadcast explicitly: a checkpoint
+    # scan carries no size statistics, so Catalyst would plan a
+    # sort-merge join and AQE switch it to broadcast only after both
+    # sides have been shuffled.
+    segs = store.read("segments").join(
+        F.broadcast(claimed.select("dom")), "dom", "left_semi"
+    )
     work = segs.withColumn("host", host_col(F.col("subdom"), F.col("dom")))
 
     # robots rules per host, broadcast (J3). The rules table carries the
@@ -716,10 +769,9 @@ def run_fetch(
     if static_bound <= max_broadcast_rows:
         small_work = True
     else:
-        small_work = (
-            work.filter(F.col("in_budget") & F.col("allowed")).count()
-            <= max_broadcast_rows
-        )
+        # counts every processed row (robots-excluded too): the segments
+        # cleanup broadcasts that set under the same certificate
+        small_work = work.filter(F.col("in_budget")).count() <= max_broadcast_rows
     # SPARK_GRAFT_ENGINE_JOIN: auto (bucketed when registered+fresh) |
     # broadcast (force the classic path — A/B lever, same as the
     # kernel's SPARK_GRAFT_KERNEL_JOIN)
@@ -739,8 +791,7 @@ def run_fetch(
         # serial term the kernel A/B measured: 1->4-core eff 0.88-0.95
         # bucketed vs 0.74 broadcast). Missing rows fall out of the SAME
         # join as found=false and take the parse fn's constant-column
-        # fetch-error path (fetcher.go:540-545) — no anti-join, and ONE
-        # checkpoint instead of parsed+union.
+        # fetch-error path (fetcher.go:540-545) — no anti-join.
         page_flagged = (
             pages_bucketed.select("url", "warc_ts", "html")
             .withColumn("found", F.lit(True))
@@ -758,11 +809,6 @@ def run_fetch(
                     F.lit(False),
                 ),
             )
-        )
-        results = (
-            found_src.select(*parse_cols)
-            .mapInPandas(parse_fn, _PARSE_OUT)
-            .localCheckpoint()
         )
     else:
         work_join_side = F.broadcast(work_slim) if small_work else work_slim
@@ -788,58 +834,52 @@ def run_fetch(
                 & (F.unix_millis(F.col("warc_ts")) <= F.unix_millis(F.col("time"))),
             )
         )
-        parsed = (
-            found_src.select(*parse_cols)
-            .mapInPandas(parse_fn, _PARSE_OUT)
-            .localCheckpoint()
+    # the parse checkpoint's job also sums the outlink keys, the bound
+    # the URL-seen verify below needs (no separate agg job)
+    parse_obs = Observation()
+    parsed = (
+        found_src.select(*parse_cols)
+        .mapInPandas(parse_fn, _PARSE_OUT)
+        .observe(
+            parse_obs,
+            F.sum(F.coalesce(F.size("link_keys"), F.lit(0))).alias("n_keys"),
         )
+        .localCheckpoint()
+    )
+    results = parsed
+    if pages_bucketed is None:
         # not-found rows need no parse: their result row is a constant-
         # column fetch-error record (fetcher.go:540-545), synthesized
-        # relationally on top of the checkpointed work set.
+        # relationally on top of the checkpointed work set. They carry
+        # no links, so only the links sink reads them (no checkpoint:
+        # its one consumer evaluates the anti-join once).
         # Broadcast hint only while small_work certifies the bound: on
         # the oversized-claim fallback path, parsed ⊆ work also exceeded
         # the 256 MB guard, and a forced broadcast would hand the driver
         # exactly the build the guard exists to avoid — let Catalyst/AQE
         # plan it.
         parsed_keys = parsed.select("dom", "subdom", "path", "proto")
-        missing_rows = (
-            fetchable.join(
-                F.broadcast(parsed_keys) if small_work else parsed_keys,
-                ["dom", "subdom", "path", "proto"],
-                "left_anti",
-            )
-            .select(
-                "dom",
-                "subdom",
-                "path",
-                "proto",
-                F.lit(now_ms).cast("long").alias("time_ms"),
-                F.lit(None).cast("int").alias("stat"),
-                F.lit("fetch error: host unreachable (not in pages table)").alias("err"),
-                F.lit(None).cast("string").alias("mime"),
-                F.lit(0).cast("long").alias("fnv"),
-                F.lit(0).cast("long").alias("fnv_txt"),
-                F.lit(None).cast("string").alias("text"),
-                F.lit(None).cast("array<string>").alias("links"),
-                F.lit(False).alias("meta_noindex"),
-                F.lit(False).alias("meta_nofollow"),
-                F.lit(None).cast("string").alias("body"),
-                F.lit(None).cast("string").alias("redirect_to"),
-                F.lit(None).cast("map<string,string>").alias("headers"),
-            )
+        missing_rows = fetchable.join(
+            F.broadcast(parsed_keys) if small_work else parsed_keys,
+            ["dom", "subdom", "path", "proto"],
+            "left_anti",
+        ).select(
+            "dom",
+            "subdom",
+            "path",
+            "proto",
+            F.lit(now_ms).cast("long").alias("time_ms"),
+            F.lit(None).cast("int").alias("stat"),
+            F.lit("fetch error: host unreachable (not in pages table)").alias("err"),
+            F.lit(None).cast("string").alias("mime"),
+            F.lit(0).cast("long").alias("fnv"),
+            F.lit(0).cast("long").alias("fnv_txt"),
+            F.lit(None).cast("string").alias("body"),
+            F.lit(None).cast("string").alias("redirect_to"),
+            F.lit(None).cast("map<string,string>").alias("headers"),
         )
-        # cheap second checkpoint: reads the slim parsed checkpoint + the
-        # checkpointed work set (one bounded broadcast build) — several
-        # consumers (links sink, outlink explode, handler) then share it
-        results = parsed.unionByName(missing_rows).localCheckpoint()
+        results = parsed.select(*missing_rows.columns).unionByName(missing_rows)
     _mark("fetch_parse")
-    # dev hook: snapshot the slim parse output so the outlink stage can
-    # be sub-profiled in isolation (scripts/profile_outlinks.py); the
-    # write happens after the fetch_parse mark and only distorts the
-    # links_sink wall of the capturing run, which the profiler discards
-    _dump = os.environ.get("SPARK_GRAFT_DUMP_PARSED")
-    if _dump:
-        results.write.mode("overwrite").parquet(_dump)
 
     # ---- links sink (S5) --------------------------------------------------
     write_seq = store.version("links") + 1
@@ -889,16 +929,8 @@ def run_fetch(
     _mark("links_sink")
 
     # ---- outlinks sink (S6 + J1) ------------------------------------------
-    follow = results
-    if cfg.fetcher.honor_meta_nofollow:
-        follow = follow.filter(~F.col("meta_nofollow"))
-    outlinks = (
-        follow.select(F.explode_outer("links").alias("url"))
-        .filter(F.col("url").isNotNull())
-        .dropDuplicates(["url"])
-    )
-    keys = seed_ops.normalize_to_keys(outlinks, cfg)
-    keys = keys.filter(link_accept_condition(cfg))
+    # Missing rows carry no links: parsed is the whole candidate source.
+    keys = outlink_keys(parsed, cfg)
 
     # The broadcast maybe-seen verify (see filter_unseen) needs the
     # OUTLINK set bounded, not just the work set: outlinks fan out to
@@ -906,13 +938,11 @@ def run_fetch(
     # genuinely seen — so needs_verify approximates the whole candidate
     # set and small_work alone cannot certify its broadcast. Gate on a
     # static fan-out bound first (zero extra jobs for tight configs);
-    # past it, bound by the MEASURED link count: sum(size(links)) over
-    # the checkpointed slim parse output — a single cheap agg scan, an
-    # upper bound on the candidate set (normalize/dedup only shrink it),
-    # and crucially NOT a re-run of the explode+normalize UDF pipeline
-    # (counting `keys` itself would double the outlink stage's volume
-    # work). Past THAT, filter_unseen falls back to the plain anti-join
-    # where AQE runtime-sizes the verify side.
+    # past it, bound by the MEASURED key count: sum(size(link_keys)),
+    # observed on the parse checkpoint's own job — an upper bound on the
+    # candidate set (filters/dedup only shrink it). Past THAT,
+    # filter_unseen falls back to the plain anti-join where AQE
+    # runtime-sizes the verify side.
     est_key_bytes = 120  # 4 short strings / outlink key, conservatively
     max_broadcast_keys = (256 << 20) // est_key_bytes
     outlink_static = static_bound * max(1, cfg.fetcher.max_links_per_page)
@@ -921,13 +951,7 @@ def run_fetch(
     elif outlink_static <= max_broadcast_keys:
         bounded_outlinks = True
     else:
-        n_links = (
-            results.agg(
-                F.sum(F.coalesce(F.size("links"), F.lit(0))).alias("n")
-            ).collect()[0]["n"]
-            or 0
-        )
-        bounded_outlinks = n_links <= max_broadcast_keys
+        bounded_outlinks = (parse_obs.get["n_keys"] or 0) <= max_broadcast_keys
     unseen = urlseen.filter_unseen(
         store, keys, use_bloom=use_bloom, bounded_candidates=bounded_outlinks
     ).localCheckpoint()
@@ -976,11 +1000,13 @@ def run_fetch(
     # already-checkpointed work table instead — a claimed domain is
     # finished exactly when none of its segment rows fell outside the
     # politeness budget, so no second segments read and no checkpoint.
+    # processed ⊆ work is bounded exactly when small_work certifies it.
+    processed_keys = processed.select(*schemas.LINK_KEY)
     remaining = (
         store.read("segments")
         .join(
-            processed.select("dom", "subdom", "path", "proto"),
-            ["dom", "subdom", "path", "proto"],
+            F.broadcast(processed_keys) if small_work else processed_keys,
+            schemas.LINK_KEY,
             "left_anti",
         )
         .select(*[f.name for f in schemas.SEGMENTS.fields])
@@ -988,7 +1014,10 @@ def run_fetch(
     leftover_doms = (
         work.filter(~F.col("in_budget")).select("dom").dropDuplicates()
     )
-    finished = claimed.select("dom").join(leftover_doms, "dom", "left_anti")
+    # leftover_doms ⊆ claimed after the dedup: bounded by claim_limit
+    finished = claimed.select("dom").join(
+        F.broadcast(leftover_doms), "dom", "left_anti"
+    )
     # ONE domain_info commit per superstep: unclaim bookkeeping applied
     # to the in-memory post-claim state, new domains unioned in; the
     # new-domain count rides the commit as an Observation (top of the
@@ -1025,9 +1054,10 @@ def run_fetch(
 
         # ---- handler hook (S9) ----------------------------------------
         # runs once the links rows are durable, overlapping the two
-        # bookkeeping commits; it only reads the checkpointed results
+        # bookkeeping commits; it only reads the parse checkpoint
+        # (missing rows are never handleable)
         if handler is not None:
-            handleable = results.filter(
+            handleable = parsed.drop("link_keys").filter(
                 (F.col("stat") == 304)
                 | (
                     (F.col("stat") >= 200)

@@ -45,7 +45,7 @@ def normalize_to_keys(urls: DataFrame, cfg: WalkerConfig, url_col: str = "url") 
     returning error, url.go:94-101) and, when
     ``blacklist_private_ips`` is set, private-range IP-literal hosts
     (F5)."""
-    from walker_spark.functions.udfs import host_col, make_url_key_udf
+    from walker_spark.functions.udfs import make_url_key_udf
 
     key_udf = make_url_key_udf(cfg.fetcher.purge_sid_list)
     keys = (
@@ -53,11 +53,20 @@ def normalize_to_keys(urls: DataFrame, cfg: WalkerConfig, url_col: str = "url") 
         .select("_k.dom", "_k.subdom", "_k.path", "_k.proto", "_k.norm_url")
         .filter(F.col("dom").isNotNull())
     )
-    if cfg.fetcher.blacklist_private_ips:
-        keys = keys.filter(
-            ~private_ip_host_condition(host_col(F.col("subdom"), F.col("dom")))
-        )
-    return keys
+    return drop_private_hosts(keys, cfg)
+
+
+def drop_private_hosts(keys: DataFrame, cfg: WalkerConfig) -> DataFrame:
+    """Key rows minus private-range IP-literal hosts (F5) when
+    ``blacklist_private_ips`` is set; a native filter over (subdom,
+    dom)."""
+    from walker_spark.functions.udfs import host_col
+
+    if not cfg.fetcher.blacklist_private_ips:
+        return keys
+    return keys.filter(
+        ~private_ip_host_condition(host_col(F.col("subdom"), F.col("dom")))
+    )
 
 
 def new_link_rows(keys: DataFrame) -> DataFrame:

@@ -125,6 +125,13 @@ def fairness_index(
     counts = df.groupBy(*group_cols, *key_cols).agg(
         F.count(F.lit(1)).cast("long").alias("_x")
     )
+    return _jain_rollup(counts, group_cols)
+
+
+def _jain_rollup(counts: DataFrame, group_cols: "Sequence[str]") -> DataFrame:
+    """:func:`fairness_index`'s group rollup over a per-key count table
+    ``(group..., _x)``. Squares are taken in DECIMAL(38,0): one key past
+    ~3.04e9 rows squares beyond BIGINT."""
     gb = counts.groupBy(*group_cols) if group_cols else counts.groupBy()
     return gb.agg(
         F.count(F.lit(1)).cast("long").alias("n_keys"),
@@ -132,7 +139,7 @@ def fairness_index(
         F.max("_x").cast("long").alias("max_key"),
         F.expr(
             "CAST((CAST(sum(_x) AS DECIMAL(38,0)) * sum(_x) * 1000000)"
-            " div (count(*) * CAST(sum(_x * _x) AS DECIMAL(38,0)))"
+            " div (count(*) * sum(CAST(_x AS DECIMAL(38,0)) * _x))"
             " AS BIGINT)"
         ).alias("jain_ppm"),
     )

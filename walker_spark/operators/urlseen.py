@@ -363,9 +363,11 @@ def filter_unseen(
         ).dropDuplicates(LINK_KEY)
         # Both broadcasts stay forced. Only the first (needs_verify into
         # the links scan) is essential for scale — it keeps the links
-        # table unexchanged — but the second was A/B-measured
-        # (profile_outlinks.py, 2026-08-18): letting Catalyst/AQE plan
-        # the anti-join instead made the full stage ~1.5 s SLOWER at
+        # table unexchanged — but the second was A/B-measured on the
+        # outlink stage in isolation (since removed with the UDF-keyed
+        # outlink pipeline it profiled; perfbench's traced run reports
+        # fetch.outlinks_unseen_s per superstep): letting Catalyst/AQE
+        # plan the anti-join instead made the full stage ~1.5 s SLOWER at
         # local[4] (8.8 -> 10.3 s; AQE shuffles both bounded sides and
         # pays an extra sort/exchange that costs more than the ~300k-row
         # driver build). confirmed is bounded by |needs_verify| after

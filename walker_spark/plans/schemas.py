@@ -206,7 +206,7 @@ def iceberg_ddl(catalog: str = "crawl", num_buckets: int = 8192) -> dict[str, st
 # full-table rewrite per superstep; on Iceberg the same bookkeeping is
 # a row-touch MERGE so each commit rewrites only the claimed rows'
 # delete/data files (merge-on-read). The superstep already computes
-# claim + unclaim + new-domain state as ONE plan (claim_plan /
+# claim + unclaim + new-domain state as ONE plan (apply_claims /
 # unclaim_plan / new_domain_rows fused into a single commit), which
 # maps 1:1 onto this statement.
 DOMAIN_INFO_MERGE_SQL = """

@@ -31,6 +31,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from walker_spark.plans import schemas
 
@@ -119,16 +120,7 @@ class FrontierStore:
             if schema is None:
                 raise KeyError(f"unknown empty table {table}")
             return self.spark.createDataFrame([], schema)
-        # one reader per delta (each delta has its own bucket=N partition
-        # dirs, which a single multi-path reader rejects), then union —
-        # Catalyst still prunes partitions/filters per child scan
-        dfs = [self.spark.read.parquet(p) for p in paths]
-        df = dfs[0]
-        for other in dfs[1:]:
-            df = df.unionByName(other, allowMissingColumns=True)
-        if schema is not None:
-            df = df.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
-        return df
+        return self._scan(table, paths)
 
     def read_since(self, table: str, version: int) -> DataFrame:
         """Rows appended in deltas committed AFTER ``version`` (delta
@@ -145,12 +137,27 @@ class FrontierStore:
                 paths.append(p)
         if not paths:
             return self.spark.createDataFrame([], schema)
-        dfs = [self.spark.read.parquet(p) for p in paths]
+        return self._scan(table, paths)
+
+    def _scan(self, table: str, paths: list[str]) -> DataFrame:
+        """Union of one reader per delta (each delta has its own
+        bucket=N partition dirs, which a single multi-path reader
+        rejects) — Catalyst still prunes partitions/filters per child
+        scan. Known tables are read with their declared schema: schema
+        inference would run a one-task job per delta."""
+        schema = schemas.TABLES.get(table)
+        reader = self.spark.read
+        if schema is not None:
+            fields = schema.fields
+            if table in schemas.BUCKETED_BY_DOM:
+                fields = fields + [StructField("bucket", IntegerType())]
+            reader = reader.schema(StructType(fields))
+        dfs = [reader.parquet(p) for p in paths]
         df = dfs[0]
         for other in dfs[1:]:
             df = df.unionByName(other, allowMissingColumns=True)
         if schema is not None:
-            df = df.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
+            df = df.select(*schema.fieldNames())
         return df
 
     def append(self, table: str, df: DataFrame) -> int:
