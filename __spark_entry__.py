@@ -1241,7 +1241,8 @@ def q_vocab_growth(spark, sf_dir):
 def q_clustering_coeffs(spark, sf_dir):
     """Per-node local clustering coefficients on the planted doc
     graph (graph.clustering_coefficients over triangle_counts —
-    zero-exchange projection past the counts); pure BIGINT ppm."""
+    zero-exchange projection past the counts); BIGINT ppm from a
+    DECIMAL(38,0) numerator."""
     from walker_spark.operators.graph import clustering_coefficients
 
     return clustering_coefficients(_planted_doc_edges(spark, sf_dir))
@@ -1513,7 +1514,7 @@ def q_heavy_hitters(spark, sf_dir):
         ).alias("item"),
     )
     summ = space_saving_summaries(toks, ["shard"], "item", k=6, buckets=4)
-    est = space_saving_estimates(summ, ["shard"], buckets=4)
+    est = space_saving_estimates(summ, ["shard"])
     exact = toks.groupBy("item").agg(
         F.count(F.lit(1)).cast("long").alias("exact_cnt")
     )
@@ -4426,8 +4427,8 @@ def oracle_sql() -> dict[str, str]:
         WITH tc AS ({_triangle_counts_sql()})
         SELECT node, degree, triangles,
                CASE WHEN degree < 2 THEN CAST(0 AS BIGINT)
-                    ELSE CAST(2 * triangles * 1000000
-                              // (degree * (degree - 1)) AS BIGINT) END
+                    ELSE CAST(CAST(triangles AS HUGEINT) * 2000000
+                              // (CAST(degree AS HUGEINT) * (degree - 1)) AS BIGINT) END
                  AS cc_ppm
         FROM tc""",
         "transitivity": f"""
@@ -4435,8 +4436,8 @@ def oracle_sql() -> dict[str, str]:
         cc AS (
           SELECT degree, triangles,
                  CASE WHEN degree < 2 THEN CAST(0 AS BIGINT)
-                      ELSE CAST(2 * triangles * 1000000
-                                // (degree * (degree - 1)) AS BIGINT) END
+                      ELSE CAST(CAST(triangles AS HUGEINT) * 2000000
+                                // (CAST(degree AS HUGEINT) * (degree - 1)) AS BIGINT) END
                    AS cc_ppm
           FROM tc)
         SELECT CAST(count(*) AS BIGINT) AS n_nodes,

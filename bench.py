@@ -373,7 +373,7 @@ def run_crawl(spark, cpus: int, shape: dict, workdir: str) -> dict:
             claim_limit=n_domains + 64,  # one claim cycle per superstep
         )
     )
-    engine = CrawlEngine(spark, workdir, cfg, use_bloom=True)
+    engine = CrawlEngine(spark, workdir, cfg)
 
     t0 = time.time()
     pages = synthetic.generate_pages(

@@ -206,7 +206,7 @@ n_bmp = bm25_pruned_topk(docs, spark.createDataFrame(BMQ, 'query_id int, query s
 bmp_s = time.time() - t0
 t0 = time.time()
 _hh_summ = space_saving_summaries(stoks.withColumn('shard', F.col('source')), ['shard'], 'item', k=16, buckets=8)
-n_hh = space_saving_estimates(_hh_summ, ['shard'], buckets=8).count()
+n_hh = space_saving_estimates(_hh_summ, ['shard']).count()
 hh_s = time.time() - t0
 t0 = time.time(); n_ham = hamming_near_dups(ph_all, max_hamming=2).count()
 ham_s = time.time() - t0

@@ -136,7 +136,7 @@ cfg = WalkerConfig(frontier=FrontierConfig(num_domain_buckets=2 * cpus,
                                            claim_limit=100000,
                                            iteration_time_budget={budget}),
                    dispatcher=DispatcherConfig(max_links_per_segment=1000))
-engine = CrawlEngine(spark, workdir, cfg, use_bloom=True)
+engine = CrawlEngine(spark, workdir, cfg)
 engine.store.overwrite("pages", spark.read.parquet({pages_path!r}))
 # the corpus ships a url-bucketed copy (same rows, bucket(64, url)):
 # register it so the fetch join runs storage-partitioned in the engine
@@ -155,7 +155,7 @@ seeds = engine.store.read("pages").select("url").filter(
 # steady-state regime the scaling criterion is about. Disclosed in the
 # generated BENCH/BASELINE.md.
 warm_dir = tempfile.mkdtemp(prefix="walker-scale-warm-")
-warm_engine = CrawlEngine(spark, warm_dir, cfg, use_bloom=True)
+warm_engine = CrawlEngine(spark, warm_dir, cfg)
 warm_pages = spark.read.parquet({pages_path!r}).limit(2000).localCheckpoint()
 warm_engine.store.overwrite("pages", warm_pages)
 if _os.path.isdir({pages_path!r} + "_bucketed"):
@@ -544,11 +544,9 @@ cross-domain concurrency is the whole machine instead of 10 goroutines.
 - **Buckets**: `num_domain_buckets = 8192` (Iceberg `bucket(8192, dom)`),
   ~1.2M URLs/bucket at 10^10; one task per bucket keeps scan partitions
   at 100-200 MB parquet.
-- **Bloom sizing**: 10 bits/key at fpp 1% -> ~12.5 GB of bitmaps
-  cluster-wide, ~1.5 MB/bucket; probes ship only their bucket's bitmap.
-  Bloom snapshots cover links <= version V; newer deltas are checked
-  exactly (incremental-scan), so maintenance is a periodic rebuild at
-  compaction, not a per-append rewrite.
+- **URL-seen**: an exact anti-join of the superstep's outlink keys
+  against links on the 4-column primary key; no filter state to size,
+  rebuild or keep in step with appends.
 - **Skew**: the per-domain segment cap (500/dispatch) structurally
   bounds any mega-host's per-iteration work; dispatch is one
   hash(dom) exchange end-to-end (verified single Exchange in the plan)

@@ -9,8 +9,6 @@ Checks (and records) the plan properties the design claims:
   broadcast — the pages scan has NO Exchange;
 - robots source: StringEndsWith pushed to the parquet scan
   (PushedFilters), column pruning to (url, html);
-- URL-seen anti-join: hash-partitioned on the 4-column key, bloom probe
-  ahead of it in the bloom variant;
 - fetch superstep (plans captured from run_fetch itself): claimed,
   processed and finished domains join by broadcast in the initial plan,
   no Python node runs between the parse and URL-seen checkpoints, and
@@ -189,48 +187,6 @@ def main():
             ("no parquet read of html (pages columns only appear in the "
              "checkpointed RDD schema)", r"ReadSchema:[^\n]*html", 0),
             ("no exchange of a url or key column", r"Exchange hashpartitioning", 0),
-        ],
-    )
-
-    # 3c. URL-seen maybe-side verify under a bounded superstep: the links
-    # table is scanned IN PLACE — confirmed keys come from a left-semi
-    # against the broadcast candidate set, new keys from a left-anti
-    # against the broadcast confirmed set. The full seen table is never
-    # exchanged (the default SMJ anti-join would shuffle all of it — the
-    # wrong plan at 10^10 rows).
-    maybe = store.read("links").select("dom", "subdom", "path", "proto").limit(100)
-    seen_tbl = store.read("links").select("dom", "subdom", "path", "proto")
-    KEY = ["dom", "subdom", "path", "proto"]
-    confirmed = seen_tbl.join(F.broadcast(maybe), KEY, "left_semi")
-    verify_plan = maybe.join(F.broadcast(confirmed), KEY, "left_anti")
-    ok &= grab(
-        "URL-seen bounded verify: links scanned in place, no seen-side exchange",
-        verify_plan,
-        [
-            ("broadcast semi+anti pair", r"BroadcastHashJoin", 2),
-            ("no exchange of the seen table key columns",
-             r"Exchange hashpartitioning\(dom", 0),
-        ],
-    )
-
-    # 4. URL-seen bloom probe: co-partitioned cogroup, no driver bitmaps
-    from walker_spark.operators import urlseen as US
-
-    US.build_bloom(store)
-    cands = store.read("links").select("dom", "subdom", "path", "proto")
-    probe = US._probe_cogrouped(
-        US._with_hashes(cands, store.num_buckets), store.read("url_seen_bloom")
-    )
-    ok &= grab(
-        "URL-seen bloom probe: cogrouped per-bucket bitmap delivery",
-        probe,
-        [
-            ("FlatMapCoGroupsInPandas (per-bucket probe task)",
-             r"FlatMapCoGroupsInPandas", 1),
-            ("candidates exchanged on _bucket",
-             r"Exchange hashpartitioning\(_bucket", (1,)),
-            ("bloom table exchanged on bucket (bitmaps stay distributed)",
-             r"Exchange hashpartitioning\(bucket", (1,)),
         ],
     )
 

@@ -64,7 +64,7 @@ cfg = WalkerConfig(
                             iteration_time_budget=500.0),
     dispatcher=DispatcherConfig(max_links_per_segment=1000),
 )
-engine = CrawlEngine(spark, workdir, cfg, use_bloom=True)
+engine = CrawlEngine(spark, workdir, cfg)
 engine.store.overwrite("pages", spark.read.parquet(PAGES))
 from walker_spark.operators.fetch import register_bucketed_pages
 if os.path.isdir(PAGES + "_bucketed"):
@@ -75,7 +75,7 @@ seeds = engine.store.read("pages").select("url").filter(
 
 # warm-up superstep on a slice (same treatment as the scaling legs)
 warm_dir = tempfile.mkdtemp(prefix="walker-profjobs-warm-")
-warm_engine = CrawlEngine(spark, warm_dir, cfg, use_bloom=True)
+warm_engine = CrawlEngine(spark, warm_dir, cfg)
 warm_pages = spark.read.parquet(PAGES).limit(2000).localCheckpoint()
 warm_engine.store.overwrite("pages", warm_pages)
 wb = warm_dir + "/pages_bucketed"

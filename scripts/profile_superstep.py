@@ -31,7 +31,7 @@ spark.sparkContext.setLogLevel("ERROR")
 workdir = tempfile.mkdtemp(prefix="walker-prof-")
 cfg = WalkerConfig(frontier=FrontierConfig(num_domain_buckets=2 * cpus,
                                            claim_limit=100000))
-engine = CrawlEngine(spark, workdir, cfg, use_bloom=True)
+engine = CrawlEngine(spark, workdir, cfg)
 engine.store.overwrite("pages", spark.read.parquet({pages!r}))
 from walker_spark.operators.fetch import register_bucketed_pages
 import os as _os

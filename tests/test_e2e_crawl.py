@@ -5,8 +5,7 @@ north_rule invariants): seed -> N supersteps -> assert
   text column (BASELINE.json input_hint invariant);
 * URL-seen: no duplicate frontier keys despite heavy re-discovery;
 * frontier growth: outlinks keep arriving at time=epoch;
-* determinism: two independent runs produce identical links tables;
-* bloom-enabled run produces the identical frontier.
+* determinism: two independent runs produce identical links tables.
 """
 
 from __future__ import annotations
@@ -21,13 +20,13 @@ from walker_spark.streaming.loop import CrawlEngine
 
 NOW0 = 1_700_000_000_000
 
-# compact_links_every=2 so a 3-iteration run exercises compaction +
-# bloom rebuild mid-crawl (O7) without changing any results
+# compact_links_every=2 so a 3-iteration run exercises links
+# compaction mid-crawl (O7) without changing any results
 CFG = WalkerConfig(frontier=FrontierConfig(num_domain_buckets=8, compact_links_every=2))
 
 
-def _run(spark, root: str, use_bloom: bool, iterations: int = 3):
-    engine = CrawlEngine(spark, root, CFG, use_bloom=use_bloom)
+def _run(spark, root: str, iterations: int = 3):
+    engine = CrawlEngine(spark, root, CFG)
     pages = synthetic.generate_pages(
         spark, n_domains=6, pages_per_domain=8, seed=7, mega_domain=0, mega_factor=3
     )
@@ -39,7 +38,7 @@ def _run(spark, root: str, use_bloom: bool, iterations: int = 3):
 
 @pytest.fixture(scope="module")
 def e2e(spark, tmp_path_factory):
-    return _run(spark, str(tmp_path_factory.mktemp("e2e")), use_bloom=False)
+    return _run(spark, str(tmp_path_factory.mktemp("e2e")))
 
 
 def test_extracted_text_matches_golden(e2e):
@@ -96,10 +95,10 @@ def test_frontier_growth_and_metrics(e2e):
     assert sum(r["metrics"].get("fetched", 0) for r in fetches) > 20
 
 
-def test_determinism_and_bloom_parity(e2e, spark, tmp_path_factory):
+def test_determinism_of_independent_runs(e2e, spark, tmp_path_factory):
     """The same seed list + config + frozen clock reproduce an
-    identical frontier — with and without the bloom pre-filter."""
-    other = _run(spark, str(tmp_path_factory.mktemp("e2e-bloom")), use_bloom=True)
+    identical frontier in a second, independent store."""
+    other = _run(spark, str(tmp_path_factory.mktemp("e2e-rerun")))
 
     def frontier(engine):
         return {

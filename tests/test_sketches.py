@@ -516,7 +516,7 @@ def test_space_saving_estimate_bounds_and_merge(spark):
     summ = space_saving_summaries(df, ["shard"], "item", k=k, buckets=buckets)
     est = {
         r["item"]: (r["est_cnt"], r["err_slack"])
-        for r in space_saving_estimates(summ, ["shard"], buckets=buckets)
+        for r in space_saving_estimates(summ, ["shard"])
         .collect()
     }
     # every kept item: exact <= est and est - err_slack <= exact
@@ -528,6 +528,42 @@ def test_space_saving_estimate_bounds_and_merge(spark):
         e, slack = est[f"t{j}"]
         assert slack == 0 and e == exact[f"t{j}"]
 
+
+def test_space_saving_merge_reads_buckets_from_summary(spark):
+    """Summaries built with 8 buckets merge and compact without being
+    told the bucket count: each item's bucket comes from the summary
+    rows, so both SpaceSaving certificates hold."""
+    from walker_spark.operators.sketches import (
+        space_saving_compact,
+        space_saving_estimates,
+        space_saving_summaries,
+    )
+
+    rng = random.Random(5)
+    rows = []
+    exact = {}
+    for sl in range(3):
+        for j in range(80):
+            it = f"w{j}"
+            n = 1 + rng.randrange(6) + (300 if j < 8 else 0)
+            exact[it] = exact.get(it, 0) + n
+            rows.extend((sl, it) for _ in range(n))
+    df = spark.createDataFrame(rows, "shard int, item string")
+    summ = space_saving_summaries(df, ["shard"], "item", k=4, buckets=8)
+    assert summ.select("bucket").distinct().count() > 4
+    est = {
+        r["item"]: (r["est_cnt"], r["err_slack"])
+        for r in space_saving_estimates(summ, ["shard"]).collect()
+    }
+    for it, (e, slack) in est.items():
+        assert exact[it] <= e, it
+        assert e - slack <= exact[it], it
+    compacted = {
+        r["item"]: (r["cnt"], r["bucket_err"])
+        for r in space_saving_compact(summ, ["shard"], k=4).collect()
+    }
+    for it, (c, _) in compacted.items():
+        assert c == est[it][0] and exact[it] <= c, it
 
 def test_space_saving_validates(spark):
     from walker_spark.operators.sketches import space_saving_summaries

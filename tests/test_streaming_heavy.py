@@ -62,7 +62,7 @@ def test_heavy_stream_certificates_and_idempotency(spark, tmp_path):
     exact = _exact_counts(batches)
     est = {
         r["item"]: (r["est_cnt"], r["err_slack"])
-        for r in heavy_hitter_estimates(spark, store, buckets=B).collect()
+        for r in heavy_hitter_estimates(spark, store).collect()
     }
     for item, (e, slack) in est.items():
         assert exact[item] <= e, item
@@ -83,14 +83,14 @@ def test_heavy_stream_compaction_preserves_survivors(spark, tmp_path):
         commit_batch(b, i, store, k=K, buckets=B)
     pre = {
         r["item"]: (r["est_cnt"], r["err_slack"])
-        for r in heavy_hitter_estimates(spark, store, buckets=B).collect()
+        for r in heavy_hitter_estimates(spark, store).collect()
     }
-    compact_store(spark, store, new_store, k=K, buckets=B)
+    compact_store(spark, store, new_store, k=K)
     os.rename(str(tmp_path / "store"), str(tmp_path / "store_old"))
     os.rename(new_store, store)
     post = {
         r["item"]: (r["est_cnt"], r["err_slack"])
-        for r in heavy_hitter_estimates(spark, store, buckets=B).collect()
+        for r in heavy_hitter_estimates(spark, store).collect()
     }
     exact = _exact_counts(batches)
     # survivors keep their pre-compaction estimate bit-for-bit

@@ -3606,6 +3606,26 @@ def test_clustering_coefficients_known_graph(spark):
         clustering_coefficients()
 
 
+def test_clustering_coefficients_hub_past_bigint(spark):
+    """A degree-4M hub with a near-complete neighbourhood puts
+    2 * triangles * 1e6 near 1.6e19, past BIGINT; under ANSI a BIGINT
+    numerator raises. The numerator is DECIMAL(38,0) and the ppm
+    matches exact integer math."""
+    from walker_spark.operators.graph import clustering_coefficients
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    d = 4_000_000
+    t = d * (d - 1) // 2 - 12_345
+    counts = spark.createDataFrame(
+        [(1, d, t), (2, d, 0)], "node long, degree long, triangles long"
+    )
+    got = {
+        r["node"]: r["cc_ppm"]
+        for r in clustering_coefficients(counts=counts).collect()
+    }
+    assert got == {1: 2 * t * 1_000_000 // (d * (d - 1)), 2: 0}
+    assert got[1] == 999_999
+
 def test_vocab_growth_planted_curve(spark):
     import pytest as _pytest
 

@@ -1,4 +1,4 @@
-"""URL-seen bloom parity, weighted-fair claiming, and politeness
+"""URL-seen exactness, weighted-fair claiming, and politeness
 budget tests (J1/M6, A3, ST3)."""
 
 from __future__ import annotations
@@ -25,77 +25,33 @@ def _keys_df(spark, urls):
     )
 
 
-def test_bloom_parity_with_exact_antijoin(spark, tmp_path):
-    """The bloom pre-filter must never change the unseen set — false
-    positives only widen the verify join (M6 exactness invariant)."""
+def test_filter_unseen_exact_antijoin(spark, tmp_path):
+    """The unseen set is exactly the candidates whose primary key is
+    not in links, one row per key (M6 exactness invariant)."""
     seen_urls = [f"http://s{i % 17}.com/p{i}.html" for i in range(300)]
     store = build_store(
         spark, str(tmp_path), [], [link_row(u) for u in seen_urls]
     )
-    candidates = _keys_df(
-        spark,
-        [f"http://s{i % 17}.com/p{i}.html" for i in range(200, 500)]  # 100 seen
-        + [f"http://new{i}.com/x.html" for i in range(50)],
-    )
-    exact = {
+    fresh = [f"http://s{i % 17}.com/p{i}.html" for i in range(200, 500)]  # 100 seen
+    fresh += [f"http://new{i}.com/x.html" for i in range(50)]
+    # repeated keys (one of them already seen) collapse to one row each
+    dupes = ["http://new0.com/x.html", "http://s0.com/p306.html", "http://s3.com/p3.html"]
+    candidates = _keys_df(spark, fresh + dupes + dupes)
+    out = [
         tuple(r)
-        for r in urlseen.filter_unseen(store, candidates, use_bloom=False)
+        for r in urlseen.filter_unseen(store, candidates)
         .select(*schemas.LINK_KEY)
         .collect()
+    ]
+    assert len(out) == len(set(out)) == 250  # 300 candidates - 100 seen + 50 new
+    seen_keys = {
+        tuple(r) for r in store.read("links").select(*schemas.LINK_KEY).collect()
     }
-    urlseen.build_bloom(store)
-    with_bloom = {
+    expected = {
         tuple(r)
-        for r in urlseen.filter_unseen(store, candidates, use_bloom=True)
-        .select(*schemas.LINK_KEY)
-        .collect()
-    }
-    assert with_bloom == exact
-    assert len(exact) == 250  # 300 candidates - 100 already seen + 50 new
-    # both probe strategies (size-adaptive picks one; force each) agree
-    for strategy in ("broadcast", "cogroup"):
-        got = {
-            tuple(r)
-            for r in urlseen.filter_unseen(
-                store, candidates, use_bloom=True, probe_strategy=strategy
-            )
-            .select(*schemas.LINK_KEY)
-            .collect()
-        }
-        assert got == exact, strategy
-
-
-def test_bloom_incremental_update(spark, tmp_path):
-    """update_bloom keeps the bloom fresh across appends; a stale bloom
-    silently falls back to the exact anti-join."""
-    store = build_store(
-        spark, str(tmp_path), [], [link_row("http://a.com/p1.html")]
-    )
-    urlseen.build_bloom(store)
-
-    more = _keys_df(spark, ["http://a.com/p2.html", "http://b.com/q.html"])
-    from walker_spark.operators.seed import new_link_rows
-
-    store.append("links", new_link_rows(more))
-    # bloom now stale -> exact fallback still correct
-    out = {
-        r["path"]
-        for r in urlseen.filter_unseen(
-            store, _keys_df(spark, ["http://a.com/p2.html", "http://c.com/r.html"]),
-            use_bloom=True,
-        ).collect()
-    }
-    assert out == {"/r.html"}
-    # refresh incrementally and probe again
-    urlseen.update_bloom(store, more)
-    out2 = {
-        r["path"]
-        for r in urlseen.filter_unseen(
-            store, _keys_df(spark, ["http://a.com/p2.html", "http://c.com/r.html"]),
-            use_bloom=True,
-        ).collect()
-    }
-    assert out2 == {"/r.html"}
+        for r in candidates.select(*schemas.LINK_KEY).collect()
+    } - seen_keys
+    assert set(out) == expected
 
 
 def test_claim_fairness_proportional_to_priority(spark, tmp_path):

@@ -59,7 +59,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--iterations", type=int, default=1)
     ap.add_argument("--dom", help="console: list links for this domain")
     ap.add_argument("--cpus", default="*")
-    ap.add_argument("--bloom", action="store_true", help="enable the URL-seen bloom")
     ap.add_argument("--resume", action="store_true", help="continue from the last checkpoint")
     ap.add_argument("--out", help="schema: write the DDL to this file (default stdout)")
     ap.add_argument("--catalog", default="crawl", help="schema: Iceberg catalog name")
@@ -96,7 +95,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from walker_spark.streaming.loop import CrawlEngine
 
-    engine = CrawlEngine(spark, args.root, cfg, use_bloom=args.bloom)
+    engine = CrawlEngine(spark, args.root, cfg)
 
     if args.command == "seed":
         if not args.url:
@@ -115,8 +114,7 @@ def main(argv: list[str] | None = None) -> int:
         from walker_spark.operators.fetch import run_fetch
 
         for i in range(args.iterations):
-            print(json.dumps(run_fetch(engine.store, cfg, now_ms, iteration=i,
-                                       use_bloom=args.bloom)))
+            print(json.dumps(run_fetch(engine.store, cfg, now_ms, iteration=i)))
         return 0
     if args.command == "run":
         out = engine.run(

@@ -98,8 +98,6 @@ class FrontierConfig:
     # per iteration (reference sleeps crawl_delay between same-host
     # fetches, fetcher.go:510-519 — same crawl set under same budget).
     iteration_time_budget: float = 500.0
-    # Expected false-positive rate for the URL-seen bloom pre-filter.
-    bloom_fpp: float = 0.01
     # Compact (rewrite) the append-heavy links table every N crawl
     # iterations so snapshot read fan-in stays bounded (Iceberg
     # rewrite_data_files analog). 0 disables.

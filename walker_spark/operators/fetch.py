@@ -540,7 +540,7 @@ def _bucketed_pages_name(path: str) -> str:
 # SPJ 26.1s best-of-4; at the 489k-page/2.6GB scaling corpus the kernel
 # measured SPJ 62s vs broadcast 84s at local[4]). Inert at cluster
 # scale, where pages always clears it.
-_SPJ_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPJ_MIN_BYTES", str(512 << 20)))
+_SPJ_MIN_BYTES = 512 << 20
 
 
 def _dir_bytes(path: str) -> int:
@@ -634,7 +634,6 @@ def run_fetch(
     cfg: WalkerConfig,
     now_ms: int,
     iteration: int = 0,
-    use_bloom: bool = False,
     handler: Callable[[DataFrame], None] | None = None,
 ) -> dict:
     """One fetch iteration over all claimable domains. ``handler`` is
@@ -772,13 +771,7 @@ def run_fetch(
         # counts every processed row (robots-excluded too): the segments
         # cleanup broadcasts that set under the same certificate
         small_work = work.filter(F.col("in_budget")).count() <= max_broadcast_rows
-    # SPARK_GRAFT_ENGINE_JOIN: auto (bucketed when registered+fresh) |
-    # broadcast (force the classic path — A/B lever, same as the
-    # kernel's SPARK_GRAFT_KERNEL_JOIN)
-    if os.environ.get("SPARK_GRAFT_ENGINE_JOIN", "auto") == "broadcast":
-        pages_bucketed = None
-    else:
-        pages_bucketed = _bucketed_pages_table(store)
+    pages_bucketed = _bucketed_pages_table(store)
     parse_fn = _make_parse_fn(cfg, now_ms, emit_text=handler is not None)
     parse_cols = [
         "dom", "subdom", "path", "proto", "url", "html", "mime", "found", "not_modified"
@@ -834,17 +827,8 @@ def run_fetch(
                 & (F.unix_millis(F.col("warc_ts")) <= F.unix_millis(F.col("time"))),
             )
         )
-    # the parse checkpoint's job also sums the outlink keys, the bound
-    # the URL-seen verify below needs (no separate agg job)
-    parse_obs = Observation()
     parsed = (
-        found_src.select(*parse_cols)
-        .mapInPandas(parse_fn, _PARSE_OUT)
-        .observe(
-            parse_obs,
-            F.sum(F.coalesce(F.size("link_keys"), F.lit(0))).alias("n_keys"),
-        )
-        .localCheckpoint()
+        found_src.select(*parse_cols).mapInPandas(parse_fn, _PARSE_OUT).localCheckpoint()
     )
     results = parsed
     if pages_bucketed is None:
@@ -931,30 +915,7 @@ def run_fetch(
     # ---- outlinks sink (S6 + J1) ------------------------------------------
     # Missing rows carry no links: parsed is the whole candidate source.
     keys = outlink_keys(parsed, cfg)
-
-    # The broadcast maybe-seen verify (see filter_unseen) needs the
-    # OUTLINK set bounded, not just the work set: outlinks fan out to
-    # max_links_per_page x work rows, and in a converged crawl most are
-    # genuinely seen — so needs_verify approximates the whole candidate
-    # set and small_work alone cannot certify its broadcast. Gate on a
-    # static fan-out bound first (zero extra jobs for tight configs);
-    # past it, bound by the MEASURED key count: sum(size(link_keys)),
-    # observed on the parse checkpoint's own job — an upper bound on the
-    # candidate set (filters/dedup only shrink it). Past THAT,
-    # filter_unseen falls back to the plain anti-join where AQE
-    # runtime-sizes the verify side.
-    est_key_bytes = 120  # 4 short strings / outlink key, conservatively
-    max_broadcast_keys = (256 << 20) // est_key_bytes
-    outlink_static = static_bound * max(1, cfg.fetcher.max_links_per_page)
-    if not small_work:
-        bounded_outlinks = False
-    elif outlink_static <= max_broadcast_keys:
-        bounded_outlinks = True
-    else:
-        bounded_outlinks = (parse_obs.get["n_keys"] or 0) <= max_broadcast_keys
-    unseen = urlseen.filter_unseen(
-        store, keys, use_bloom=use_bloom, bounded_candidates=bounded_outlinks
-    ).localCheckpoint()
+    unseen = urlseen.filter_unseen(store, keys).localCheckpoint()
     _mark("outlinks_unseen")
     # same write_seq as the result rows is safe: an outlink row is
     # only written for keys with NO existing links row, so it can

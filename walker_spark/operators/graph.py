@@ -998,8 +998,9 @@ def clustering_coefficients(
 
         cc_ppm = 2 * triangles * 1e6 div (degree * (degree - 1))
 
-    for degree >= 2, else 0 (pure BIGINT — degree^2 stays in range
-    because triangles <= d(d-1)/2 bounds the numerator by 1e6 * d^2).
+    for degree >= 2, else 0. The numerator is DECIMAL(38,0): with
+    triangles <= d(d-1)/2 it reaches 1e6 * d^2, which overflows BIGINT
+    once a hub's degree passes ~3M (the result itself is <= 1e6).
     Returns ``(node, degree, triangles, cc_ppm)``. Pass ``counts=``
     (a :func:`triangle_counts` output) to project a precomputed count
     table instead of re-counting — the pipeline reuse precedent.
@@ -1017,8 +1018,8 @@ def clustering_coefficients(
         F.when(F.col("degree") < 2, F.lit(0).cast("long"))
         .otherwise(
             F.expr(
-                "CAST(2 * triangles * 1000000"
-                " div (degree * (degree - 1)) AS BIGINT)"
+                "CAST(CAST(triangles AS DECIMAL(38,0)) * 2000000"
+                " div (CAST(degree AS DECIMAL(38,0)) * (degree - 1)) AS BIGINT)"
             )
         )
         .alias("cc_ppm"),

@@ -4,7 +4,7 @@ Spark restatement of ``walker seed`` / StoreParsedURL (reference:
 cmd/cmd.go:398-436, cassandra/datastore.go:440-535 — SURVEY §3.3):
 
     raw urls -> normalize + primary-key UDF (X1-X4)
-             -> URL-seen anti-join (J1, bloom-accelerated)
+             -> URL-seen anti-join (J1)
              -> append links rows at time=epoch
              -> anti-join domain_info (J4 replaces the 20k LRU domain
                 cache) -> append new domains
@@ -125,13 +125,12 @@ def ingest_urls(
     store: FrontierStore,
     urls: DataFrame,
     cfg: WalkerConfig,
-    use_bloom: bool = False,
     url_col: str = "url",
 ) -> dict:
     """Normalize, dedup against the seen set, and append the frontier
     rows + any new domains. Returns metrics."""
     keys = normalize_to_keys(urls, cfg, url_col).localCheckpoint()
-    unseen = urlseen.filter_unseen(store, keys, use_bloom=use_bloom).localCheckpoint()
+    unseen = urlseen.filter_unseen(store, keys).localCheckpoint()
     n_new = unseen.count()
     n_domains = add_new_domains(store, unseen, cfg)
     if n_new:

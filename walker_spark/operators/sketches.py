@@ -636,7 +636,6 @@ def space_saving_summaries(
 def space_saving_estimates(
     summary: DataFrame,
     slice_cols: Sequence[str],
-    buckets: int = 4,
 ) -> DataFrame:
     """Merge per-slice SpaceSaving summaries into global point
     estimates (Agarwal et al. 2013 merge law): for every item kept by
@@ -648,8 +647,10 @@ def space_saving_estimates(
 
     so ``exact <= est_cnt`` and ``est_cnt - err_slack <= exact`` —
     both bounds are certificates, and an item whose summaries cover
-    every slice has ``err_slack = 0`` (exactly counted). Output:
-    ``(item, est_cnt, err_slack)``.
+    every slice has ``err_slack = 0`` (exactly counted). Each item's
+    bucket is read from the summary rows that keep it, so the merge
+    cannot disagree with the bucket count the summaries were built
+    with. Output: ``(item, est_cnt, err_slack)``.
 
     Scale shape: the merged item universe is bounded by ``slices x
     buckets x k`` rows — the grid (items x slices) and the per-bucket
@@ -660,10 +661,7 @@ def space_saving_estimates(
     live build pipeline each branch would otherwise re-run the
     corpus aggregation."""
     summary = summary.localCheckpoint()
-    h = _md5_u32(F.col("item"))
-    items = summary.select(
-        "item", (h % buckets).cast("int").alias("bucket")
-    ).distinct()
+    items = summary.select("item", "bucket").distinct()
     slices = summary.select(*slice_cols).distinct()
     errs = summary.groupBy(*slice_cols, "bucket").agg(
         F.max("bucket_err").alias("_berr")
@@ -689,7 +687,6 @@ def space_saving_compact(
     summary: DataFrame,
     slice_cols: Sequence[str],
     k: int = 8,
-    buckets: int = 4,
 ) -> DataFrame:
     """Collapse per-slice SpaceSaving summaries into ONE summary —
     the compaction half of the merge law (Agarwal et al. 2013): per
@@ -706,7 +703,8 @@ def space_saving_compact(
     preserved bit-for-bit (c' IS the pre-compaction estimate), and
     every post-compaction point estimate stays a true upper bound.
     Output has no slice columns — tag one on (e.g. a batch id) to
-    merge the compacted summary with newer slices.
+    merge the compacted summary with newer slices. Buckets come from
+    the summary rows, as in :func:`space_saving_estimates`.
 
     Scale shape: input is already sketch-sized (slices x buckets x k
     rows), so the grid/rank passes here are driver-trivial by
@@ -717,10 +715,7 @@ def space_saving_compact(
     from pyspark.sql import Window
 
     summary = summary.localCheckpoint()
-    h = _md5_u32(F.col("item"))
-    items = summary.select(
-        "item", (h % buckets).cast("int").alias("bucket")
-    ).distinct()
+    items = summary.select("item", "bucket").distinct()
     slices = summary.select(*slice_cols).distinct()
     errs = summary.groupBy(*slice_cols, "bucket").agg(
         F.max("bucket_err").alias("_berr")

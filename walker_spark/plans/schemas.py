@@ -150,18 +150,6 @@ ROBOTS_RULES = StructType(
     ]
 )
 
-# Per-bucket URL-seen bloom filter (our addition per north_rule; the
-# anti-join backstop keeps results exact — SURVEY §2.4/M6).
-URL_SEEN_BLOOM = StructType(
-    [
-        StructField("bucket", IntegerType(), False),
-        StructField("num_bits", LongType(), False),
-        StructField("num_hashes", IntegerType(), False),
-        StructField("bitmap", BinaryType(), False),
-    ]
-)
-
-
 def iceberg_ddl(catalog: str = "crawl", num_buckets: int = 8192) -> dict[str, str]:
     """Production DDL (documentation + usable on a real cluster with the
     Iceberg runtime). Bucketing by ``dom`` reproduces walker's
@@ -231,7 +219,6 @@ TABLES: dict[str, StructType] = {
     "domain_info": DOMAIN_INFO,
     "robots_rules": ROBOTS_RULES,
     "robots_pages": ROBOTS_PAGES,
-    "url_seen_bloom": URL_SEEN_BLOOM,
 }
 
 # Tables hash-bucketed by dom for partition pruning + co-located joins.

@@ -123,10 +123,9 @@ class FrontierStore:
         return self._scan(table, paths)
 
     def read_since(self, table: str, version: int) -> DataFrame:
-        """Rows appended in deltas committed AFTER ``version`` (delta
-        names embed their commit version). Powers incremental consumers
-        like the URL-seen bloom: probe the bloom for data <= V, exact-
-        check only the deltas > V (Iceberg incremental-scan analog)."""
+        """Rows of ``table`` appended in deltas committed after
+        ``version`` (delta names embed their commit version); an empty
+        frame when there are none (Iceberg incremental-scan analog)."""
         man = self._load_manifest(table)
         schema = schemas.TABLES.get(table)
         paths = []
@@ -247,7 +246,7 @@ class FrontierStore:
             )
         return plan
 
-    # ---- small key/value metadata (e.g. bloom build lineage) ---------------
+    # ---- small key/value metadata (e.g. cache-build lineage) ---------------
 
     def put_meta(self, key: str, value: dict) -> None:
         path = os.path.join(self.root, f"meta-{key}.json")

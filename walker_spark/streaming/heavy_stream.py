@@ -79,15 +79,11 @@ def read_summaries(spark: SparkSession, summary_dir: str) -> DataFrame:
     )
 
 
-def heavy_hitter_estimates(
-    spark: SparkSession, summary_dir: str, buckets: int = 4
-) -> DataFrame:
+def heavy_hitter_estimates(spark: SparkSession, summary_dir: str) -> DataFrame:
     """Merged point estimates over every committed batch:
     ``(item, est_cnt, err_slack)`` with both SpaceSaving certificates
     intact. Touches only summary rows — never raw batches."""
-    return space_saving_estimates(
-        read_summaries(spark, summary_dir), ["batch"], buckets=buckets
-    )
+    return space_saving_estimates(read_summaries(spark, summary_dir), ["batch"])
 
 
 def compact_store(
@@ -95,7 +91,6 @@ def compact_store(
     summary_dir: str,
     dst_dir: str,
     k: int = 8,
-    buckets: int = 4,
 ) -> None:
     """Collapse all committed batch summaries into one (tagged
     ``batch=0``) in ``dst_dir``. The caller swaps ``dst_dir`` into
@@ -103,7 +98,7 @@ def compact_store(
     write the compacted summary next to its inputs (double-count on
     crash)."""
     compacted = space_saving_compact(
-        read_summaries(spark, summary_dir), ["batch"], k=k, buckets=buckets
+        read_summaries(spark, summary_dir), ["batch"], k=k
     ).withColumn("batch", F.lit(0).cast("long"))
     compacted.write.mode("overwrite").parquet(
         os.path.join(dst_dir, "batch=0")

@@ -32,7 +32,6 @@ def stream_seed_urls(
     input_dir: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    use_bloom: bool = False,
 ):
     """Start (and with ``available_now`` run to completion) a streaming
     ingestion of seed-url text files. Returns the StreamingQuery."""
@@ -42,7 +41,7 @@ def stream_seed_urls(
     )
 
     def handle_batch(batch_df, batch_id: int):
-        ingest_urls(store, batch_df, cfg, use_bloom=use_bloom)
+        ingest_urls(store, batch_df, cfg)
 
     writer = (
         urls.writeStream.foreachBatch(handle_batch)

@@ -36,20 +36,18 @@ class CrawlEngine:
         spark: SparkSession,
         root: str,
         cfg: WalkerConfig | None = None,
-        use_bloom: bool = False,
         handler: Callable[[DataFrame], None] | None = None,
     ):
         self.spark = spark
         self.cfg = cfg or WalkerConfig()
         self.store = FrontierStore(spark, root, self.cfg.frontier.num_domain_buckets)
-        self.use_bloom = use_bloom
         self.handler = handler
 
     # -- seeding (S8) --
     def seed(self, urls: list[str] | DataFrame) -> dict:
         if not isinstance(urls, DataFrame):
             urls = self.spark.createDataFrame([(u,) for u in urls], "url string")
-        out = ingest_urls(self.store, urls, self.cfg, use_bloom=self.use_bloom)
+        out = ingest_urls(self.store, urls, self.cfg)
         # Pre-materialize the robots cache (the /robots.txt subset of
         # pages) as part of frontier preparation, so no superstep pays
         # the full pages suffix-scan — real crawlers warm robots caches
@@ -62,12 +60,6 @@ class CrawlEngine:
             # parse every robots.txt once per pages snapshot at ingest;
             # supersteps then only join the materialized rules table
             _robots_rules_table(self.store, self.cfg)
-        if self.use_bloom:
-            # initial bloom snapshot; later appends are covered by the
-            # incremental read_since check until the next rebuild
-            from walker_spark.operators.urlseen import build_bloom
-
-            build_bloom(self.store, self.cfg.frontier.bloom_fpp)
         return out
 
     # -- checkpoint/resume --
@@ -99,16 +91,9 @@ class CrawlEngine:
                 self.cfg,
                 now_ms,
                 iteration=i,
-                use_bloom=self.use_bloom,
                 handler=self.handler,
             )
             if compact_every and (i + 1) % compact_every == 0:
                 self.store.compact("links")  # bound snapshot fan-in (O7)
-                if self.use_bloom:
-                    # rebuild so the bloom snapshot catches up and the
-                    # incremental (read_since) check stays small
-                    from walker_spark.operators.urlseen import build_bloom
-
-                    build_bloom(self.store, self.cfg.frontier.bloom_fpp)
             out.append({"iteration": i, "dispatch": dmetrics, "fetch": fmetrics})
         return out
